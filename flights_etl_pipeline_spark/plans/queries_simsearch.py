@@ -122,6 +122,14 @@ def _centroids(spark: SparkSession, sf_dir: str, k: int = None) -> list[tuple]:
 _NC_MARGIN = 1e-3
 
 
+def _require_identifiers(*names: str) -> None:
+    """Column names interpolated raw into SQL text must be plain
+    identifiers; anything else raises instead of mis-parsing."""
+    bad = [n for n in names if not n.isidentifier()]
+    if bad:
+        raise ValueError(f"column names must be plain identifiers: {bad}")
+
+
 def _nearest_centroid(cents: list[tuple], emb_col: str = "embedding",
                       enorm_col: str = "enorm") -> F.Column:
     """Row-LOCAL argmax assignment to the nearest centroid, TWO-PHASE:
@@ -170,9 +178,7 @@ def _nearest_centroid(cents: list[tuple], emb_col: str = "embedding",
     # The SQL-text path interpolates column names raw — only plain
     # identifiers are accepted (ADVICE r12: a name needing backticks
     # would silently mis-parse where the old F.col() tolerated it).
-    assert emb_col.isidentifier() and enorm_col.isidentifier(), (
-        emb_col, enorm_col,
-    )
+    _require_identifiers(emb_col, enorm_col)
     cids = _flit_render([c[0] for c in cents])
     cvecs = _flit_render([list(c[1]) for c in cents])
     cnorms = _flit_render([c[2] for c in cents])
@@ -223,7 +229,7 @@ def _nearest_cid(cents: list[tuple], emb_col: str = "embedding") -> F.Column:
     # note — same bit-identical-tree argument, parity-gated). CASE WHEN
     # keeps its lazy contract: the exact decimal folds still never
     # evaluate on unambiguous rows.
-    assert emb_col.isidentifier(), emb_col  # raw SQL-text interpolation
+    _require_identifiers(emb_col)  # raw SQL-text interpolation
     cids = _flit_render([c[0] for c in cents])
     cvecs = _flit_render([list(c[1]) for c in cents])
     cnorms = _flit_render([c[2] for c in cents])

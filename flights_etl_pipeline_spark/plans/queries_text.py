@@ -1814,8 +1814,11 @@ def gopher_metrics(docs: DataFrame, *carry: str) -> DataFrame:
     stop_expr = "CAST(0 AS BIGINT)"
     for lang, words in STOPWORDS.items():
         # raw SQL string literals: only quote-free words are renderable
-        # (the ADVICE-r12 identifier-guard discipline)
-        assert "'" not in lang and all("'" not in w for w in words)
+        if "'" in lang or any("'" in w for w in words):
+            raise ValueError(
+                f"stopword list {lang!r} has a quote; it cannot be "
+                "rendered as a SQL string literal"
+            )
         arr = "array(" + ",".join(f"'{w}'" for w in words) + ")"
         stop_expr = (
             f"CASE WHEN lang = '{lang}' THEN "

@@ -16,9 +16,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
-    """S3: partition-discovering parquet scan."""
-    return spark.read.parquet(path)
+def read_parquet_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """S3: partition-discovering parquet scan. Without ``schema`` Spark
+    runs a one-task job to read a footer and infer it; pass the schema
+    the table was written with (partition columns last) to skip that
+    job. Partition values are still discovered from the directory
+    names."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(path)
 
 
 def read_csv_table(

@@ -5,6 +5,12 @@ intended semantics (SURVEY.md section 2.10 -- intent, not the reference's
 bugs), never from the code under test. Also asserts idempotence: a second
 run with the same source must not change bronze (watermark) or the dims
 (left-anti incremental).
+
+The stage-by-stage tests pin the pipeline's IO contract: every frame a
+stage returns carries exactly the schema a fresh parquet read infers,
+each stage stays within its Spark-job budget (one inferred read of its
+input, no footer-inference job for tables it wrote), and no stage
+caches.
 """
 
 from __future__ import annotations
@@ -14,7 +20,9 @@ import math
 
 import duckdb
 import pytest
+from pyspark.sql.types import IntegerType
 
+from flights_etl_pipeline_spark.plans import pipeline
 from flights_etl_pipeline_spark.plans.pipeline import run_pipeline
 from tests.flights_fixture import make_flights
 
@@ -165,6 +173,111 @@ def test_second_run_is_idempotent(result, spark):
     assert res2.dim_airline_rows == res1.dim_airline_rows
     assert res2.dim_airport_rows == res1.dim_airport_rows
     assert res2.fact_rows == res1.fact_rows
+
+
+# Spark jobs per stage (fresh lake, re-run). Fresh: one inferred read of
+# the stage's input, then its writes (an aggregate or distinct write is
+# a shuffle-map job plus the write job). The re-run adds the bronze
+# watermark probe (2 jobs) and the three left-anti dim lookups. One more
+# inference read or an eager action in any stage breaks its budget.
+JOB_BUDGET = {
+    "bronze": (1, 3),
+    "silver": (2, 2),
+    "gold": (5, 5),
+    "warehouse": (8, 11),
+}
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+
+@pytest.fixture(scope="module")
+def stage_runs(spark, raw_pdf, tmp_path_factory):
+    """Run the four stages one by one, twice over one lake. Records per
+    run and stage: the Spark jobs in the stage's job group, RDDs left
+    persisted, persist or cache calls made while the stage ran, and --
+    once the run is done, before the next one rewrites the lake -- each
+    returned frame's schema and row count next to a fresh inferring
+    read of its path."""
+    lake = str(tmp_path_factory.mktemp("lake_stages"))
+    source = spark.createDataFrame(raw_pdf)
+    sc = spark.sparkContext
+    frame_cls = type(source)
+    calls: list[str] = []
+
+    def recording(name):
+        orig = getattr(frame_cls, name)
+
+        def wrapper(self, *args, **kwargs):
+            calls.append(name)
+            return orig(self, *args, **kwargs)
+
+        return wrapper
+
+    stages = (
+        ("bronze", lambda: {"bronze/flights": pipeline.run_bronze(spark, source, lake)}),
+        ("silver", lambda: {"silver/flights": pipeline.run_silver(spark, lake)}),
+        ("gold", lambda: dict(zip(
+            ("gold/revenue_n_seat_remain_ym", "gold/fbc_travel_duration_relation"),
+            pipeline.run_gold(spark, lake, AS_OF),
+        ))),
+        ("warehouse", lambda: {
+            f"warehouse/{name}": df
+            for name, df in pipeline.run_warehouse(spark, lake).items()
+        }),
+    )
+    runs = []
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(frame_cls, "persist", recording("persist"))
+        mp.setattr(frame_cls, "cache", recording("cache"))
+        for run in range(2):
+            per_stage = {}
+            for stage, call in stages:
+                group = f"test_pipeline_e2e.{run}.{stage}"
+                before = _persistent_rdd_ids(sc)
+                calls.clear()
+                sc.setJobGroup(group, group)
+                try:
+                    frames = call()
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setLocalProperty("spark.job.description", None)
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                per_stage[stage] = {
+                    "frames": frames,
+                    "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+                    "persisted": _persistent_rdd_ids(sc) - before,
+                    "cache_calls": list(calls),
+                }
+            for rec in per_stage.values():
+                rec["frames"] = {
+                    path: (df.schema, df.count(), inferred.schema, inferred.count())
+                    for path, df in rec["frames"].items()
+                    for inferred in [spark.read.parquet(f"{lake}/{path}")]
+                }
+            runs.append(per_stage)
+    return runs
+
+
+@pytest.mark.parametrize("run", [0, 1], ids=["fresh", "rerun"])
+def test_returned_schemas_match_parquet_inference(stage_runs, run):
+    for stage, rec in stage_runs[run].items():
+        for path, (schema, rows, inferred, inferred_rows) in rec["frames"].items():
+            assert schema == inferred, (stage, path)
+            assert rows == inferred_rows, (stage, path)
+    for stage in ("bronze", "silver"):
+        schema = stage_runs[run][stage]["frames"][f"{stage}/flights"][0]
+        assert schema.names[-3:] == ["year", "month", "day"]
+        assert all(isinstance(f.dataType, IntegerType) for f in schema.fields[-3:])
+
+
+@pytest.mark.parametrize("run", [0, 1], ids=["fresh", "rerun"])
+def test_stage_job_budget_and_no_cache(stage_runs, run):
+    for stage, rec in stage_runs[run].items():
+        assert rec["jobs"] <= JOB_BUDGET[stage][run], (stage, rec["jobs"])
+        assert not rec["persisted"], (stage, rec["persisted"])
+        assert not rec["cache_calls"], (stage, rec["cache_calls"])
 
 
 def test_compaction_reduces_file_count(spark, tmp_path):
