@@ -457,59 +457,61 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CLUSTER_THRESHOLD = 0.5
 
 
-def _propagate_parts(pairs: DataFrame):
-    """LAZY building blocks of min-label propagation: the symmetric
-    edge set and the min-of-neighborhood seed labels. Shared by the
-    convergence loop (which persists/checkpoints them) and the
-    EXPLAINS plan audit (which reads them lazily — the loop-body
-    checkpoint otherwise hides the per-round plan; VERDICT r9
-    item 7)."""
+def _propagate_edges(pairs: DataFrame) -> DataFrame:
+    """LAZY symmetric edge set of min-label propagation, with one
+    self-loop ``(v, v)`` per node. The self-loops let a round read the
+    previous labels once (see :func:`_propagate_round`); ``distinct``
+    drops the repeated loops and any duplicate or reversed input
+    pairs. Shared by the convergence loop and the EXPLAINS plan
+    audit."""
     ca, cb = pairs.columns
-    # one explode instead of union(pairs, reversed): the union's two
-    # branches each scan the (expensive) pair-generation subtree when
-    # the edges cache materializes; the explode emits both directions
-    # from a SINGLE scan (measured ~15% off the cache-fill job, r12)
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(ca).alias("src"), F.col(cb).alias("dst")),
-                F.struct(F.col(cb).alias("src"), F.col(ca).alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    # seed comp = min(id, neighbors) instead of id: for near-clique
-    # components (the dominant shape here) that IS the fixed point, so
-    # the loop's first round only confirms convergence — one round
-    # saved at identical cost (a groupBy replaces the distinct)
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("mn"))
-        .select(
-            F.col("src").alias("id"),
-            F.least("src", "mn").alias("comp"),
+    # one explode instead of a union of pair projections: each union
+    # branch would scan the (expensive) pair-generation subtree, the
+    # explode emits both directions and both loops from a SINGLE scan
+    return (
+        pairs.select(
+            F.explode(
+                F.array(
+                    *(
+                        F.struct(F.col(s).alias("src"), F.col(d).alias("dst"))
+                        for s, d in ((ca, cb), (cb, ca), (ca, ca), (cb, cb))
+                    )
+                )
+            ).alias("e")
         )
+        .select("e.src", "e.dst")
+        .distinct()
     )
-    return edges, labels
+
+
+def _seed_labels(edges: DataFrame) -> DataFrame:
+    """LAZY seed labels: comp = min(id, neighbors), the self-loop
+    making the ``id`` term implicit. For near-clique components (the
+    dominant shape here) that IS the fixed point, so the loop's first
+    round only confirms convergence."""
+    return edges.groupBy("src").agg(F.min("dst").alias("comp")).select(
+        F.col("src").alias("id"), "comp"
+    )
 
 
 def _propagate_round(
-    edges: DataFrame, labels: DataFrame, comp_type: str, obs=None
+    edges: DataFrame, labels: DataFrame, obs=None
 ) -> DataFrame:
-    """One LAZY propagation round: join labels across edges, elect the
-    min label per node (the old label rides the union as a null-padded
-    ``prev`` column so MIN(prev) recovers it through the same
-    aggregate). The caller checkpoints the result and reads the
-    changed-label Observation; the audit path just explains it."""
-    prop = edges.join(labels, edges["src"] == labels["id"]).select(
-        F.col("dst").alias("id"),
-        "comp",
-        F.lit(None).cast(comp_type).alias("prev"),
-    )
+    """One LAZY propagation round: join labels across the edges and
+    elect the min label per ``dst``. The node's old label arrives over
+    its self-loop (``src = dst``), so ``prev`` comes out of the same
+    aggregate and ``labels`` is read exactly once. The caller
+    checkpoints the result and reads the changed-label Observation;
+    the audit path just explains it."""
     out = (
-        labels.select("id", "comp", F.col("comp").alias("prev"))
-        .unionByName(prop)
-        .groupBy("id")
-        .agg(F.min("comp").alias("comp"), F.min("prev").alias("prev"))
+        edges.join(labels, edges["src"] == labels["id"])
+        .groupBy("dst")
+        .agg(
+            F.min("comp").alias("comp"),
+            F.min(F.when(F.col("src") == F.col("dst"), F.col("comp"))).alias(
+                "prev"
+            ),
+        )
     )
     if obs is not None:
         out = out.observe(
@@ -518,7 +520,7 @@ def _propagate_round(
                 "changed"
             ),
         )
-    return out.select("id", "comp")
+    return out.select(F.col("dst").alias("id"), "comp")
 
 
 def _min_label_propagate(
@@ -531,54 +533,61 @@ def _min_label_propagate(
     Each round is one distributed join + a map-side-combinable min
     aggregate — the label-propagation scheme GraphX's
     connectedComponents uses; converges in O(component diameter)
-    rounds. ``localCheckpoint`` truncates per-round lineage so the
-    plan does not grow with the round count; only the per-round
+    rounds. Every node carries a self-loop edge, so a round reads the
+    previous labels once: ``edges ⋈ labels → groupBy(dst)`` elects
+    ``MIN(comp)`` and recovers the old label as ``MIN(comp)`` over the
+    loop edge. A second labels reference would not share the first
+    one's shuffle: the optimizer infers ``isnotnull(id)`` on the join
+    side only, so the two exchanges never compare equal for reuse.
+
+    The edges are materialized with ``localCheckpoint``, not
+    ``persist``: a cached plan keeps the output partitioning of its
+    last shuffle (AQE may not coalesce a cached plan's final stage
+    unless ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+    is on), so a persisted edge set stays at
+    ``spark.sql.shuffle.partitions`` partitions and every round runs
+    that many near-empty tasks. A checkpoint runs under AQE like any
+    query and keeps the coalesced partitions. ``DataFrame.unpersist``
+    releases nothing on a checkpointed frame, so the loop calls none;
+    the ContextCleaner reclaims the blocks once the frames are gone.
+
+    ``localCheckpoint`` also truncates per-round lineage so the plan
+    does not grow with the round count; only the per-round
     changed-label count crosses to the driver, and it rides the
-    checkpoint action itself as an ``Observation`` metric (r8: the
-    previous separate ``isEmpty`` convergence probe doubled the jobs
-    per round — on converge-in-3 near-clique graphs the loop was
-    scheduling-overhead-bound, ~4 s of the old 5.3 s
-    fuzzy_customer_clusters wall at sf0.1). The old label rides the
-    union as a null-padded ``prev`` column (every id keeps exactly one
-    labels row, so ``MIN(prev)`` recovers it through the same
-    aggregate that elects the new label). If a pathological long-chain
-    component exceeds ``max_rounds`` (path diameter > rounds), labels
-    would be only partially propagated — that case warns loudly
-    instead of returning silently-wrong components.
+    checkpoint action itself as an ``Observation`` metric (a separate
+    ``isEmpty`` convergence probe doubled the jobs per round). If a
+    pathological long-chain component exceeds ``max_rounds`` (path
+    diameter > rounds), labels would be only partially propagated —
+    that case warns loudly instead of returning silently-wrong
+    components.
 
     ``rounds_per_job`` lazy rounds are FUSED into each checkpointed
-    job (VERDICT r11 item 6: the loop is scheduling-floor-bound — r11
-    measured exactly 4 jobs at base AND at 10x, each paying a full
-    Spark job floor on near-clique graphs that converge in 2-3
-    rounds). Only the LAST fused round carries the Observation; the
-    stop test is unchanged (stop when that round changed nothing),
-    and because the min-label fixpoint is unique and propagation is
-    idempotent at it, running up to ``rounds_per_job - 1`` extra lazy
-    rounds past convergence is the identity — results are identical
-    for every input, only the job count halves. The per-job lineage
-    deepens by one join+agg, still bounded by the fuse width (the
-    checkpoint truncates it each job), so failure-recovery depth at
-    100 TB stays O(rounds_per_job) shuffles, not O(total rounds)."""
+    job: the loop is scheduling-floor-bound on near-clique graphs that
+    converge in 2-3 rounds. The seed labels are not materialized on
+    their own; they are the first lazy step of the first fused job.
+    Only the LAST fused round carries the Observation; the stop test
+    is unchanged (stop when that round changed nothing), and because
+    the min-label fixpoint is unique and propagation is idempotent at
+    it, running up to ``rounds_per_job - 1`` extra lazy rounds past
+    convergence is the identity — results are identical for every
+    input. The per-job lineage deepens by one join+agg per fused
+    round, still bounded by the fuse width (the checkpoint truncates
+    it each job), so failure-recovery depth stays O(rounds_per_job)
+    shuffles, not O(total rounds)."""
     from pyspark.sql import Observation
 
-    edges, labels = _propagate_parts(pairs)
-    edges = edges.persist()
-    labels = labels.localCheckpoint()
-    comp_type = dict(labels.dtypes)["comp"]
+    edges = _propagate_edges(pairs).localCheckpoint()
+    labels = _seed_labels(edges)
     rounds_left = max_rounds
     converged = False
     while rounds_left > 0:
         step = min(rounds_per_job, rounds_left)
         obs = Observation()
-        new_labels = labels
         for i in range(step):
-            new_labels = _propagate_round(
-                edges, new_labels, comp_type,
-                obs if i == step - 1 else None,
+            labels = _propagate_round(
+                edges, labels, obs if i == step - 1 else None
             )
-        new_labels = new_labels.localCheckpoint()
-        labels, prev = new_labels, labels
-        prev.unpersist()
+        labels = labels.localCheckpoint()
         rounds_left -= step
         if not (obs.get["changed"] or 0):
             converged = True
@@ -592,7 +601,6 @@ def _min_label_propagate(
             RuntimeWarning,
             stacklevel=2,
         )
-    edges.unpersist()
     return labels
 
 
@@ -632,6 +640,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``localCheckpoint`` truncates the per-iteration lineage so the plan
     does not grow with the round count. The driver-side loop holds no
     data — only the convergence flag crosses to the driver.
+
+    Every doc carries a self-loop edge, so a round reads the previous
+    labels once; the seed labels run inside the first fused job. The
+    edge set is checkpointed, not persisted: a cached plan keeps its
+    last shuffle's ``spark.sql.shuffle.partitions`` partitions, a
+    checkpoint keeps AQE's coalesced ones.
     """
     pairs = (
         minhash_lsh_pairs(spark, sf_dir)
@@ -1284,7 +1298,13 @@ def fuzzy_customer_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     after pairwise scoring. Same min-label propagation loop as
     dedup_clusters (one join + a min agg per round, lineage truncated,
     only the convergence flag reaches the driver); components here are
-    near-cliques, so it converges in 2-3 rounds.
+    near-cliques, so it converges in 2-3 rounds. A round reads the
+    previous labels once (the old label arrives over each node's
+    self-loop edge) and the seed labels run inside the first fused
+    job. The edges are checkpointed rather than persisted, because a
+    cached plan stays at ``spark.sql.shuffle.partitions`` partitions
+    and each round would run that many tasks on a few hundred KB; the
+    checkpoint keeps AQE's coalesced partitions (one at sf0.01).
 
     Scale shape: edge generation inherits the lossless deletion-
     neighborhood canopy (O(1) block sizes); the propagation joins key

@@ -48,50 +48,120 @@ def test_converged_run_does_not_warn(spark):
         _min_label_propagate(_chain_pairs(spark, 3)).collect()
 
 
+def _union_find_components(edges):
+    parent = {v: v for e in edges for v in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # union by min root: every root is its component's minimum
+    return {v: find(v) for v in parent}
+
+
 def test_random_graphs_match_union_find(spark):
     """Property check: on random edge lists the distributed min-label
     propagation must produce exactly the components a pure-Python
-    union-find derives (comp = min node id of the component). Guards
-    the r8 rewrite (Observation-merged convergence + min(id, neighbor)
-    seeding) against correctness drift on non-clique shapes."""
+    union-find derives (comp = min node id of the component). The
+    lists keep self-pairs ``(a, a)``, duplicate pairs and reversed
+    pairs, which the edge set's self-loops and ``distinct`` must
+    absorb."""
     import random
 
     from flights_etl_pipeline_spark.plans.queries_dedup import (
         _min_label_propagate,
     )
 
-    rng = random.Random(0xC0FFEE)
-    for _ in range(4):
-        n_nodes = rng.randint(2, 12)
-        n_edges = rng.randint(1, 14)
-        edges = [
-            (rng.randrange(n_nodes), rng.randrange(n_nodes))
-            for _ in range(n_edges)
-        ]
-        edges = [(a, b) for a, b in edges if a != b] or [(0, 1)]
+    for seed in range(6):
+        rng = random.Random(0xC0FFEE + seed)
+        for _ in range(2):
+            n_nodes = rng.randint(2, 16)
+            edges = [
+                (rng.randrange(n_nodes), rng.randrange(n_nodes))
+                for _ in range(rng.randint(1, 18))
+            ]
+            a, b = edges[0]
+            edges += [(a, a), (a, b), (b, a)]
+            rng.shuffle(edges)
 
-        parent = list(range(n_nodes))
+            df = spark.createDataFrame(edges, "a LONG, b LONG")
+            got = {
+                r["id"]: r["comp"]
+                for r in _min_label_propagate(df).collect()
+            }
+            want = _union_find_components(edges)
+            assert got == want, (seed, edges, got, want)
 
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
 
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        touched = {v for e in edges for v in e}
-        want = {}
-        for v in touched:
-            root = find(v)
-            comp = min(u for u in touched if find(u) == root)
-            want[v] = comp
+def _seq(jseq):
+    return [jseq.apply(i) for i in range(jseq.length())]
 
-        df = spark.createDataFrame(edges, "a LONG, b LONG")
-        got = {
-            r["id"]: r["comp"]
-            for r in _min_label_propagate(df).collect()
-        }
-        assert got == want, (edges, got, want)
+
+def test_round_reads_edges_and_labels_once(spark):
+    """Over a checkpointed edge set and checkpointed labels, one round's
+    physical plan has exactly two leaves, both ExistingRDD scans: the
+    edges and the labels. A second read of the labels (the old-label
+    union branch) would run their shuffle twice in every fused job."""
+    from flights_etl_pipeline_spark.plans.queries_dedup import (
+        _propagate_edges,
+        _propagate_round,
+        _seed_labels,
+    )
+
+    edges = _propagate_edges(_chain_pairs(spark, 4)).localCheckpoint()
+    labels = _seed_labels(edges).localCheckpoint()
+    plan = _propagate_round(edges, labels)._jdf.queryExecution().sparkPlan()
+    leaves = _seq(plan.collectLeaves())
+    assert [leaf.nodeName() for leaf in leaves] == ["Scan ExistingRDD"] * 2
+    outputs = sorted(
+        sorted(a.name() for a in _seq(leaf.output())) for leaf in leaves
+    )
+    assert outputs == [["comp", "id"], ["dst", "src"]]
+
+
+def test_fuzzy_clusters_task_budget(spark):
+    """fuzzy_customer_clusters at sf0.01 under the default shuffle
+    width runs at most the measured number of tasks inside the query
+    function. A persisted edge set keeps its last shuffle's
+    ``spark.sql.shuffle.partitions`` partitions (AQE does not coalesce
+    a cached plan's final stage), and every round then runs that many
+    near-empty tasks; the checkpointed edges and labels coalesce to
+    one partition at this size. The only stages that scale with the
+    cores are the two around the canopy's ``defaultParallelism``
+    repartition."""
+    from conftest import SF_ORACLE
+
+    from flights_etl_pipeline_spark.plans.queries_dedup import (
+        fuzzy_customer_clusters,
+    )
+    from flights_etl_pipeline_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+
+    sc = spark.sparkContext
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    spark.conf.set(key, str(DEFAULT_SHUFFLE_PARTITIONS))
+    group = "test_label_propagation.fuzzy_customer_clusters"
+    sc.setJobGroup(group, group)
+    try:
+        fuzzy_customer_clusters(spark, SF_ORACLE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set(key, width)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    tasks = 0
+    for job in tracker.getJobIdsForGroup(group):
+        for stage in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(stage)
+            if info is not None:
+                tasks += info.numCompletedTasks
+    # measured at local[4]: 20 one-task stages and two 4-task stages
+    budget = 20 + 2 * sc.defaultParallelism
+    assert tasks <= budget, (tasks, budget)
