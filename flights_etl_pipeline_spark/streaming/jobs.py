@@ -17,7 +17,8 @@ sink):
   timeouts); exact-parity twin of the batch ``events_sessionize``.
 
 Scale notes: streaming state is partitioned by the grouping key
-(``spark.sql.shuffle.partitions`` state stores), so both jobs shard by
+(one state store per state partition, sized by :func:`_run_to_memory`'s
+rule), so both jobs shard by
 high-cardinality uniform keys (window x type, user_id). The pandas state
 function touches each user's delta once per batch — no per-user collect,
 no cross-batch replay.
@@ -49,37 +50,36 @@ _SCRATCH = os.path.join(
     "ckpt",
 )
 _COUNTER = itertools.count()
+# ceiling on a stream's state partitions: at local[32], 8 state partitions
+# drained events_dedup_stream at sf0.1 in 1.5 s against 3.0 s at 32
+MAX_STATE_PARTITIONS = 8
 
 
-def _run_to_memory(
-    writer_df: DataFrame,
-    output_mode: str,
-    name: str,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Start ``writer_df`` into a memory sink, await AvailableNow drain,
-    return the sink table. Checkpoint is throwaway (fresh per run).
+def _run_to_memory(writer_df: DataFrame, output_mode: str, name: str) -> DataFrame:
+    """Start ``writer_df`` into a memory sink, await the AvailableNow
+    drain and return the sink's rows. The checkpoint is throwaway (fresh
+    per run) and the sink's temp view is dropped before returning, so a
+    call, failed or not, leaves no table registered in the session.
 
-    ``state_partitions`` sets ``spark.sql.shuffle.partitions`` for the
-    stream's planning window (restored after the drain): a streaming
-    query's STATE partition count is fixed from this conf at first
-    start, and a stateful job should size it to its key cardinality /
-    throughput, not inherit the batch-analytics default — every
-    micro-batch pays one state-store commit PER state partition, a
-    fixed floor that dwarfs the actual row work when partitions vastly
-    outnumber what the state needs (measured on events_dedup_stream at
-    sf0.1: ~7.5k state rows, warm drain 3.0 s at 32 partitions vs
-    1.5 s at 8 — VERDICT r8 item 4). Production discipline is the
-    same knob: set it explicitly per streaming job before first start
-    (it is immutable for the checkpoint's lifetime without a state
-    rescale), scaling with keys-per-horizon, not with corpus size.
+    State partitions: the stream is planned at
+    ``min(MAX_STATE_PARTITIONS, defaultParallelism)`` partitions, i.e.
+    ``spark.sql.shuffle.partitions`` is set for the planning window and
+    restored after the drain. A streaming query fixes its state partition
+    count from that conf at first start, and every micro-batch runs one
+    state task per partition, each paying a checksummed state-store
+    commit whatever its row count. More partitions than task slots run
+    each batch in several waves of tasks that mostly wait on commits: on
+    4 cores at sf0.01, events_dedup_stream's 5 micro-batches ran 8 state
+    tasks each (44 tasks per call, 5.2 s executor run time against 0.46 s
+    CPU), and a call with its noop write took 2.80 s at 8 partitions
+    against 2.12 s at 4 (24 tasks, 3.6 s run time).
     """
     spark = writer_df.sparkSession
     qname = f"mem_{name}_{next(_COUNTER)}_{os.getpid()}"
     ckpt = os.path.join(_SCRATCH, f"{qname}-{uuid.uuid4().hex[:8]}")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    state_parts = min(MAX_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
     try:
         q = (
             writer_df.writeStream.outputMode(output_mode)
@@ -93,11 +93,14 @@ def _run_to_memory(
         # shuffle.partitions into its offset metadata asynchronously after
         # start(), so restoring earlier would race the capture
         q.awaitTermination()
+        out = spark.table(qname)
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        # the resolved frame keeps the sink's rows; the view would
+        # otherwise hold them in driver memory for the life of the session
+        spark.catalog.dropTempView(qname)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -275,11 +278,7 @@ def events_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = ev.dropDuplicatesWithinWatermark(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    # state is keys-per-horizon-bounded (~7.5k (user, type) keys at
-    # sf0.1): 8 state partitions, not the 32-partition analytics
-    # default — see _run_to_memory's contract for the measured
-    # per-partition commit floor and the 100 TB sizing rule
-    return _run_to_memory(dedup, "append", "dedup", state_partitions=8)
+    return _run_to_memory(dedup, "append", "dedup")
 
 
 # ---------------------------------------------------------------------------
@@ -326,12 +325,7 @@ def events_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND purchase_ts <= view_ts + INTERVAL 1 HOUR"
         ),
     ).select("user_id", "view_id", "purchase_id")
-    # stream-stream joins keep FOUR state stores per partition per
-    # micro-batch (keyToNumValues/keyWithIndex x both sides); state is
-    # keys-per-watermark-horizon-bounded, so size partitions to that,
-    # not the analytics default (measured at sf0.01: 16.4 s at 32
-    # partitions vs 4.6 s at 8 -- the _run_to_memory contract)
-    return _run_to_memory(joined, "append", "ss_join", state_partitions=8)
+    return _run_to_memory(joined, "append", "ss_join")
 
 
 # ---------------------------------------------------------------------------
@@ -632,8 +626,7 @@ def events_view_purchase_left_outer(spark: SparkSession, sf_dir: str) -> DataFra
         ),
         "leftOuter",
     ).select("user_id", "view_id", "purchase_id")
-    # same four-state-store-per-partition bill as the inner join above
-    out = _run_to_memory(joined, "append", "ss_left_outer", state_partitions=8)
+    out = _run_to_memory(joined, "append", "ss_left_outer")
     # sentinel-left rows (user_id < 0) exist only to advance the clock
     return out.filter(F.col("user_id") >= 0)
 
@@ -1312,7 +1305,7 @@ def events_ohlc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    out = _run_to_memory(bars, "append", "ohlc", state_partitions=8)
+    out = _run_to_memory(bars, "append", "ohlc")
     return out.filter(
         F.col("hour_start") <= F.timestamp_micros(F.lit(max_us))
     )
@@ -1407,4 +1400,4 @@ def events_zscore_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_to_memory(flagged, "append", "zscore", state_partitions=8)
+    return _run_to_memory(flagged, "append", "zscore")

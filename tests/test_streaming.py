@@ -170,3 +170,66 @@ def test_sessionize_counter_survives_timeout():
     state.hasTimedOut = True
     out4 = list(sessionize_state_fn((7,), iter([]), state))
     assert out4[0]["session_id"].iloc[0] == 2
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata missing")
+def test_stream_state_partitions_follow_task_slots(spark):
+    """A stateful stream runs one state partition per task slot (capped
+    at MAX_STATE_PARTITIONS), restores ``spark.sql.shuffle.partitions``
+    after the drain -- also when the stream fails at start() -- and
+    leaves no memory-sink table registered."""
+    import time
+
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from flights_etl_pipeline_spark.streaming import jobs
+    from flights_etl_pipeline_spark.streaming.source import (
+        prepare_stream_dir,
+        read_event_stream,
+    )
+
+    class _StateParts(StreamingQueryListener):
+        def __init__(self):
+            self.started, self.parts = set(), []
+
+        def onQueryStarted(self, event):
+            self.started.add(str(event.id))
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if str(p.id) in self.started and p.stateOperators:
+                self.parts.append(p.stateOperators[0].numShufflePartitions)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "11")
+    listener = _StateParts()
+    spark.streams.addListener(listener)
+    try:
+        out = jobs.events_dedup_stream(spark, SF_DIR)
+        assert spark.conf.get(key) == "11"
+        assert out.count() > 0  # the frame outlives the dropped sink view
+        # progress events reach Python listeners asynchronously
+        deadline = time.time() + 60
+        while time.time() < deadline and not listener.parts:
+            time.sleep(0.5)
+        want = min(jobs.MAX_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+        assert listener.parts and set(listener.parts) == {want}, listener.parts
+
+        stream_dir, _ = prepare_stream_dir(spark, SF_DIR, n_chunks=4, sentinels=False)
+        ev = read_event_stream(spark, stream_dir)
+        # append-mode aggregation without a watermark is rejected at start()
+        with pytest.raises(AnalysisException):
+            jobs._run_to_memory(ev.groupBy("event_type").count(), "append", "bad")
+        assert spark.conf.get(key) == "11"
+        assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")]
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, prev)
